@@ -1035,17 +1035,6 @@ def _pq_sampled_codebook(
     )
 
 
-def int_sq_l2(a: Column, b: Column) -> Column:
-    """Integer squared-L2 fold — order-free (integer addition is
-    associative/commutative), so unlike :func:`sq_l2` it is exact under
-    ANY evaluation order or partitioning."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, z: acc + z,
-    )
-
-
 def pq_refined_codebook(
     corpus: DataFrame,
     m: int = 4,

@@ -19,7 +19,7 @@ from __future__ import annotations
 import os
 import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -186,7 +186,15 @@ def scoped_cache(df, storage_level=None):
 
 
 def localize(df, max_rows: int = 100_000, on_overflow: str = "raise"):
-    """Materialize a SMALL DataFrame to a driver-side LocalRelation.
+    """Materialize a SMALL DataFrame as a ``LocalRelation``.
+
+    The rows are collected inside the JVM and handed back to the
+    session's ``createDataFrame(java.util.List[Row], schema)``: no Python
+    round-trip, the schema (nullability included) is kept, and the plan
+    is a ``LocalTableScan``. A broadcast join against it re-runs none of
+    the lineage; on Spark 4.1 its build side is still one single-stage
+    job over the driver's rows (``LocalTableScanExec`` does not override
+    ``executeCollectIterator``, which ``BroadcastExchangeExec`` calls).
 
     The right tool when a bounded result (top-k rows, a frontier
     candidate set, an n²-bounded rollup) is consumed by several
@@ -208,8 +216,8 @@ def localize(df, max_rows: int = 100_000, on_overflow: str = "raise"):
     (ADVICE r8: a hard ValueError at plan-build time is the wrong
     failure mode for a shape that would merely run slower).
     """
-    rows = df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
+    rows = df.limit(max_rows + 1)._jdf.collectAsList()
+    if rows.size() > max_rows:
         if on_overflow == "cache":
             cached = scoped_cache(df)
             cached.count()  # eager: one materialization, no stampede
@@ -218,7 +226,8 @@ def localize(df, max_rows: int = 100_000, on_overflow: str = "raise"):
             f"localize(): frame exceeds max_rows={max_rows}; "
             "this helper is for results bounded by construction"
         )
-    return df.sparkSession.createDataFrame(rows, df.schema)
+    spark = df.sparkSession
+    return DataFrame(spark._jsparkSession.createDataFrame(rows, df._jdf.schema()), spark)
 
 
 def release_scoped_caches() -> int:

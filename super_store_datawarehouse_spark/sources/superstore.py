@@ -63,13 +63,13 @@ def read_superstore_csv(spark: SparkSession, path: str = DEFAULT_CSV_PATH) -> Da
         .schema(SUPERSTORE_CSV_SCHEMA)
         .csv(path)
     )
+    cols = []
     for field in SUPERSTORE_CSV_SCHEMA.fields:
+        c = F.col(f"`{field.name}`")
         if field.dataType.simpleString() == "string":
-            df = df.withColumn(
-                field.name, F.translate(field.name, "\x93\x94", "“”")
-            )
-    for old, new in RENAMES.items():
-        df = df.withColumnRenamed(old, new)
-    return df.withColumn("order_date", F.to_date("order_date", "M/d/yyyy")).withColumn(
-        "ship_date", F.to_date("ship_date", "M/d/yyyy")
-    )
+            c = F.translate(c, "\x93\x94", "“”")
+        name = RENAMES[field.name]
+        if name in ("order_date", "ship_date"):
+            c = F.to_date(c, "M/d/yyyy")
+        cols.append(c.alias(name))
+    return df.select(cols)

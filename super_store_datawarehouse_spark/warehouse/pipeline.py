@@ -2,9 +2,10 @@
 
 One call materializes the same 15 tables the reference loads into MySQL
 (etl.py:1187-1201), as lazy DataFrames keyed by the reference table
-names. Dimensions are cached before fact construction: every fact plan
-broadcasts dimension key sets, and caching prevents re-deriving each
-dim once per fact (6× at reference shape).
+names. Only the merged lines are cached: the dimensions and all six
+facts read them. The dimensions are narrow projections of one localized
+row (see ``dims``), so re-deriving one for each fact that broadcasts it
+costs no job over the lines and needs no cache.
 """
 
 from __future__ import annotations
@@ -16,59 +17,30 @@ from super_store_datawarehouse_spark.warehouse import dims, facts
 from super_store_datawarehouse_spark.warehouse.ingest import merge_duplicate_order_lines
 
 
-def build_warehouse(
-    spark: SparkSession, csv_path: str = DEFAULT_CSV_PATH, cache: bool = True
-) -> dict[str, DataFrame]:
-    """Build all 15 warehouse tables as DataFrames (lazy until acted on)."""
-    raw = read_superstore_csv(spark, csv_path)
-    lines = merge_duplicate_order_lines(raw)
-    if cache:
-        lines = lines.cache()
-
-    calendar, calendar_month = dims.build_calendar_dims(lines)
-    customer = dims.build_customer_dim(lines)
-    region, state, location = dims.build_geography_dims(lines)
-    shipping = dims.build_shipping_dim(lines)
-    category, product = dims.build_product_dims(lines)
-
-    dim_tables = {
-        "Calendar": calendar,
-        "CalendarMonth": calendar_month,
-        "Customer": customer,
-        "Region": region,
-        "State": state,
-        "Location": location,
-        "Category": category,
-        "Product": product,
-        "Shipping": shipping,
-    }
-    if cache:
-        dim_tables = {k: v.cache() for k, v in dim_tables.items()}
-        calendar = dim_tables["Calendar"]
-        calendar_month = dim_tables["CalendarMonth"]
-        customer = dim_tables["Customer"]
-        region = dim_tables["Region"]
-        state = dim_tables["State"]
-        location = dim_tables["Location"]
-        category = dim_tables["Category"]
-        product = dim_tables["Product"]
-        shipping = dim_tables["Shipping"]
-
+def build_warehouse(spark: SparkSession, csv_path: str = DEFAULT_CSV_PATH) -> dict[str, DataFrame]:
+    """Build all 15 warehouse tables as DataFrames (lazy until acted on,
+    except the one-row dimension domain, which is collected here)."""
+    lines = merge_duplicate_order_lines(read_superstore_csv(spark, csv_path)).cache()
+    d = dims.build_dimensions(lines)
     fact_tables = {
-        "Item": facts.build_item_fact(lines, customer, product, calendar, location),
-        "Orders": facts.build_orders_fact(lines, customer, calendar, location, shipping),
-        "OrderM": facts.build_order_m_fact(lines, calendar_month, state),
+        "Item": facts.build_item_fact(
+            lines, d["Customer"], d["Product"], d["Calendar"], d["Location"]
+        ),
+        "Orders": facts.build_orders_fact(
+            lines, d["Customer"], d["Calendar"], d["Location"], d["Shipping"]
+        ),
+        "OrderM": facts.build_order_m_fact(lines, d["CalendarMonth"], d["State"]),
         "ProductPerformance": facts.build_product_performance_fact(
-            lines, category, state, calendar_month
+            lines, d["Category"], d["State"], d["CalendarMonth"]
         ),
         "ShippingBehavior": facts.build_shipping_behavior_fact(
-            lines, shipping, category, region
+            lines, d["Shipping"], d["Category"], d["Region"]
         ),
         "ShippingBehaviorS": facts.build_shipping_behavior_s_fact(
-            lines, shipping, category, state
+            lines, d["Shipping"], d["Category"], d["State"]
         ),
     }
-    return {**dim_tables, **fact_tables}
+    return {**d, **fact_tables}
 
 
 def write_warehouse(

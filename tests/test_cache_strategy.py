@@ -87,9 +87,41 @@ def test_localize_preserves_values_and_breaks_lineage(spark):
         tuple(r) for r in agg.collect()
     )
     assert loc.schema == agg.schema
-    # LocalRelation / LocalTableScan: no exchange, no source scan
+    # a true LocalRelation: the whole physical plan is one LocalTableScan
+    # (not a Scan ExistingRDD over a Python-parallelized RDD)
     p = _plan(loc)
-    assert "Exchange" not in p and "Scan parquet" not in p
+    assert p.startswith("LocalTableScan") and "Exchange" not in p and "ExistingRDD" not in p
+
+
+def test_broadcast_of_localized_frame_reruns_no_lineage(spark):
+    """Broadcasting a localized frame re-runs none of its lineage. Jobs
+    and stages are counted by job group with the status tracker, against
+    the probe side alone. Spark 4.1 still collects a LocalTableScan
+    build side through one single-stage job (LocalTableScanExec does not
+    override executeCollectIterator); the lazy aggregate is the control,
+    whose build side re-runs its shuffle."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    probe = spark.range(0, 1000).select((F.col("id") % 7).alias("g"))
+    agg = spark.range(0, 100).groupBy((F.col("id") % 7).alias("g")).count()
+    loc = localize(agg)
+
+    def jobs_and_stages(df, group):
+        sc.setJobGroup(group, group)
+        try:
+            df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        ids = tracker.getJobIdsForGroup(group)
+        return len(ids), sum(len(tracker.getJobInfo(j).stageIds) for j in ids)
+
+    jobs, stages = jobs_and_stages(probe, "localize-probe")
+    assert jobs_and_stages(probe.join(F.broadcast(loc), "g"), "localize-local") == (
+        jobs + 1,
+        stages + 1,
+    )
+    _, lazy_stages = jobs_and_stages(probe.join(F.broadcast(agg), "g"), "localize-lazy")
+    assert lazy_stages > stages + 1
 
 
 def test_localize_refuses_unbounded_frames(spark):

@@ -501,18 +501,19 @@ def test_embedding_near_dup_planted_pair(spark):
     assert got[(1, 2)] > 0.99
 
 
-def test_anti_join_rejects_nonempty_path(spark):
+def test_anti_join_rejects_nonempty_path(spark, superstore_csv):
     """The harness q16 returns 0 rows on testdata; exercise the non-empty
     rejects path the reference's skip-logging handles (etl.py:489-496)."""
     from super_store_datawarehouse_spark.sources.superstore import read_superstore_csv
     from super_store_datawarehouse_spark.warehouse import dims, facts
     from super_store_datawarehouse_spark.warehouse.ingest import merge_duplicate_order_lines
 
-    lines = merge_duplicate_order_lines(read_superstore_csv(spark)).limit(200).cache()
-    customer = dims.build_customer_dim(lines)
-    _, product = dims.build_product_dims(lines)
-    calendar, _ = dims.build_calendar_dims(lines)
-    _, _, location = dims.build_geography_dims(lines)
+    raw = read_superstore_csv(spark, superstore_csv[0])
+    lines = merge_duplicate_order_lines(raw).limit(200).cache()
+    d = dims.build_dimensions(lines)
+    customer, product, calendar, location = (
+        d["Customer"], d["Product"], d["Calendar"], d["Location"]
+    )
 
     # poison the customer dim: drop one customer → its rows become rejects
     victim = lines.select("customer_code").first()["customer_code"]

@@ -1,7 +1,9 @@
 """Golden-output tests for the Superstore warehouse (SURVEY §5).
 
-Cardinalities come from the reference's export
-``superstore_dw_export.xlsx`` (SURVEY §1.4); measure identities and
+Over the reference CSV, cardinalities come from the reference's export
+``superstore_dw_export.xlsx`` (SURVEY §1.4); without it the warehouse is
+built from a generated CSV and checked against the generator's ground
+truth and DuckDB counts (``cardinalities`` in conftest). Measure identities and
 integrity invariants replace the DDL's PK/FK constraints (FIXTURES.md
 §F2); cross-engine value checks use DuckDB over the same CSV as an
 independent oracle.
@@ -31,25 +33,12 @@ GOLDEN_CARDINALITIES = {
     "ShippingBehaviorS": 458,
 }
 
-CSV = "/root/reference/Sample - Superstore.csv"
+@pytest.mark.parametrize("table", sorted(GOLDEN_CARDINALITIES))
+def test_golden_cardinality(warehouse, cardinalities, table):
+    assert warehouse[table].count() == cardinalities[table]
 
 
-@pytest.fixture(scope="module")
-def csv_utf8(tmp_path_factory):
-    """UTF-8 transcoding of the cp1252 CSV (DuckDB reads UTF-8 only)."""
-    out = tmp_path_factory.mktemp("csv") / "superstore_utf8.csv"
-    out.write_text(
-        open(CSV, encoding="windows-1252").read(), encoding="utf-8"
-    )
-    return str(out)
-
-
-@pytest.mark.parametrize("table,expected", sorted(GOLDEN_CARDINALITIES.items()))
-def test_golden_cardinality(warehouse, table, expected):
-    assert warehouse[table].count() == expected
-
-
-def test_item_preserves_all_measures(warehouse, csv_utf8):
+def test_item_preserves_all_measures(warehouse, csv_utf8, cardinalities):
     """No rows are lost to key resolution: Item measure totals equal the
     raw CSV totals (duplicate merge preserves sums by construction)."""
     con = duckdb.connect()
@@ -62,7 +51,7 @@ def test_item_preserves_all_measures(warehouse, csv_utf8):
     ).first()
     # money is DECIMAL(10,2)-rounded per row; worst-case drift vs the
     # unrounded CSV totals is 0.005 per row
-    tol = 0.005 * 9986
+    tol = 0.005 * cardinalities["Item"]
     assert float(got[0]) == pytest.approx(sales, abs=tol)
     assert int(got[1]) == int(qty)
     assert float(got[2]) == pytest.approx(profit, abs=tol)
@@ -220,10 +209,10 @@ def test_location_probe_grain(spark):
         ],
         cols,
     )
-    calendar, _ = dims.build_calendar_dims(lines)
-    customer = dims.build_customer_dim(lines)
-    _, _, location = dims.build_geography_dims(lines)
-    _, product = dims.build_product_dims(lines)
+    d = dims.build_dimensions(lines)
+    calendar, customer, location, product = (
+        d["Calendar"], d["Customer"], d["Location"], d["Product"]
+    )
 
     assert location.count() == 4  # dim keeps the full (postal, city, state) grain
 
